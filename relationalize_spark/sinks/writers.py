@@ -4,15 +4,70 @@ Mirrors the reference's output surface (reference utils.py:5-28 and
 the CSV/gzip-JSONL examples) on top of Spark writers: JSONL, CSV with
 the sorted-header contract (reference schema.py:98-114 drives the
 CSV field order in examples/local_fs_example_csv_output.py:52-59),
-parquet (the scale default), and a dict-of-tables convenience writer
-for relationalize output.
+parquet (the scale default), and a dict-of-tables writer for
+relationalize output whose per-table writes overlap on one driver
+thread pool (:func:`write_each`, shared with the stream demux).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Mapping, Sequence
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 
 from ..schema import Schema
+
+#: driver threads that submit per-table writes. Each table's write is
+#: its own Spark job into its own directory, and much of its time is
+#: driver latency (Catalyst analysis, job submission) or a job too
+#: small to fill the cores, so independent tables overlap well. 16
+#: threads measured no better than 8 on a 70-table stream corpus
+#: (BASELINE.md r8).
+WRITE_POOL_SIZE = 8
+
+
+class TableWriteError(RuntimeError):
+    """One table's write failed; ``table`` and ``path`` name it."""
+
+    def __init__(
+        self, table: str, path: str, cause: BaseException, others: Sequence[str] = ()
+    ):
+        msg = f"writing table {table!r} to {path} failed: {cause}"
+        if others:
+            msg += f" (also failed: {list(others)})"
+        super().__init__(msg)
+        self.table = table
+        self.path = path
+
+
+def write_each(
+    targets: Mapping[str, str],
+    write: Callable[[str, str], None],
+    max_workers: int = WRITE_POOL_SIZE,
+) -> None:
+    """Call ``write(table, path)`` for every ``table -> path`` entry of
+    ``targets`` on a driver thread pool of up to ``max_workers``
+    threads — the one way this package submits a set of per-table
+    writes. Targets must be disjoint directories.
+
+    Every write runs to its end even when another one fails; after the
+    pool joins, the first failed table in ``targets`` order raises
+    :class:`TableWriteError` (chained to its cause, other failed
+    tables listed). Spark local properties of the calling thread (job
+    group, scheduler pool) do not carry into the pool threads.
+    """
+    if max_workers < 1:
+        raise ValueError(f"max_workers must be at least 1, got {max_workers}")
+    if not targets:
+        return
+    with ThreadPoolExecutor(max_workers=min(max_workers, len(targets))) as ex:
+        futures = {t: ex.submit(write, t, p) for t, p in targets.items()}
+    # leaving the block joined the pool: every write has ended
+    failed = [t for t, f in futures.items() if f.exception() is not None]
+    if failed:
+        t, e = failed[0], futures[failed[0]].exception()
+        raise TableWriteError(t, targets[t], e, failed[1:]) from e
 
 
 def write_jsonl(
@@ -78,6 +133,14 @@ def write_tables(
     mode: str = "overwrite",
 ) -> None:
     """Write every derived table under ``{base_path}/{table}`` — the
-    batch counterpart of the streaming parquet_table_sink."""
-    for name, df in tables.items():
-        df.write.mode(mode).format(format).save(f"{base_path}/{name}")
+    batch counterpart of the streaming parquet_table_sink.
+
+    The tables' writes overlap: each is its own Spark job, submitted
+    from one of up to :data:`WRITE_POOL_SIZE` driver threads
+    (:func:`write_each`). A failed write does not stop the others;
+    once all have ended, :class:`TableWriteError` names the failed
+    table and its target path. An empty ``tables`` writes nothing."""
+    write_each(
+        {name: f"{base_path}/{name}" for name in tables},
+        lambda name, path: tables[name].write.mode(mode).format(format).save(path),
+    )

@@ -10,13 +10,18 @@ conflicted or all-null leaves stay VARIANT. The existing
 :func:`relationalize` then splits out tables, and
 :func:`infer_and_convert` resolves the VARIANT leaves into choice
 columns — the full reference pipeline (relationalize -> Schema ->
-convert, reference README.md:50-95) as three Spark jobs and zero
-per-row Python.
+convert, reference README.md:50-95) with zero per-row Python.
+
+Its eager jobs are the fused top-level analysis plus one aggregate job
+pair for each deeper table that has variant leaves. On the benchmark's
+``jsonl_batch`` corpus (9 tables) that is 4 + 5 x 2 = 14 Spark jobs
+before the caller writes anything.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NoReturn
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,27 +57,42 @@ class VNode:
 
 
 def parse_variant_schema(s: str) -> VNode:
+    """Parse a ``schema_of_variant(_agg)`` type string into a tree.
+
+    Raises ValueError naming the position and the whole string when
+    ``s`` is not one well-formed type (truncated, trailing text, empty
+    leaf)."""
     pos = 0
+
+    def fail(expected: str, at: int) -> NoReturn:
+        raise ValueError(
+            f"malformed variant schema: expected {expected} at position "
+            f"{at} of {s!r}"
+        )
+
+    def expect(token: str) -> None:
+        nonlocal pos
+        if not s.startswith(token, pos):
+            fail(repr(token), pos)
+        pos += len(token)
 
     def parse_type() -> VNode:
         nonlocal pos
         if s.startswith("OBJECT<", pos):
             pos += len("OBJECT<")
             node = VNode("object")
-            while s[pos] != ">":
+            while not s.startswith(">", pos):
+                if node.fields:
+                    expect(", ")
                 name = parse_name()
-                assert s.startswith(": ", pos), f"expected ': ' at {pos} in {s!r}"
-                pos += 2
+                expect(": ")
                 node.fields[name] = parse_type()
-                if s.startswith(", ", pos):
-                    pos += 2
             pos += 1
             return node
         if s.startswith("ARRAY<", pos):
             pos += len("ARRAY<")
             node = VNode("array", element=parse_type())
-            assert s[pos] == ">", f"expected '>' at {pos} in {s!r}"
-            pos += 1
+            expect(">")
             return node
         # leaf: runs to the next top-level ',' or '>'; may itself
         # contain angle-free parens like DECIMAL(21,1).
@@ -87,14 +107,19 @@ def parse_variant_schema(s: str) -> VNode:
             elif depth == 0 and ch in ",>":
                 break
             pos += 1
-        return VNode("leaf", leaf_type=s[start:pos].strip())
+        leaf = s[start:pos].strip()
+        if not leaf:
+            fail("a type", start)
+        return VNode("leaf", leaf_type=leaf)
 
     def parse_name() -> str:
         nonlocal pos
-        if s[pos] == "`":
+        if s.startswith("`", pos):
             end = pos + 1
             out = []
             while True:
+                if end >= len(s):
+                    fail("a closing '`'", end)
                 if s[end] == "`":
                     if end + 1 < len(s) and s[end + 1] == "`":
                         out.append("`")
@@ -106,13 +131,16 @@ def parse_variant_schema(s: str) -> VNode:
             name = "".join(out)
             pos = end + 1
             return name
-        end = s.index(":", pos)
+        end = s.find(":", pos)
+        if end < 0:
+            fail("a field name and ':'", pos)
         name = s[pos:end]
         pos = end
         return name
 
     node = parse_type()
-    assert pos == len(s), f"trailing content at {pos} in {s!r}"
+    if pos != len(s):
+        fail("the end of the string", pos)
     return node
 
 

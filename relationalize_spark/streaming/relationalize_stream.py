@@ -30,6 +30,7 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.relationalize import relationalize
 from ..schema import Schema
+from ..sinks.writers import WRITE_POOL_SIZE, write_each
 
 TableSink = Callable[[str, DataFrame, int], None]
 
@@ -299,9 +300,10 @@ class JsonStreamDemux:
     #: corpus, same session (BASELINE.md r8): steady per-batch
     #: 50.0 s serial -> 35.2 s at 8 threads (1.42x; 16 threads no
     #: better — the residue is executor-side job work plus
-    #: lock-serialized analysis, not submission latency). Default 8;
-    #: set 1 to restore strictly serial submission.
-    write_concurrency: int = 8
+    #: lock-serialized analysis, not submission latency). Default
+    #: ``sinks.writers.WRITE_POOL_SIZE`` (8), the pool ``write_tables``
+    #: uses; set 1 for strictly serial submission.
+    write_concurrency: int = WRITE_POOL_SIZE
     schemas: dict[str, Schema] = field(default_factory=dict)
     #: batch_id -> number of malformed lines quarantined in that batch
     #: (write-time Observation, no second scan; cleared with the
@@ -461,22 +463,6 @@ class JsonStreamDemux:
                     )
                     self._written_schemas[t] = ser
 
-            def write_one(t: str) -> None:
-                # schema first, rows second (see class docstring).
-                write_schema(t)
-                if self.exactly_once:
-                    # idempotent landing zone: a replayed batch
-                    # OVERWRITES its own directory instead of
-                    # re-appending — exactly-once by construction,
-                    # no finalize-side dedup shuffle, uuid-rid-safe.
-                    out.tables[t].write.mode("overwrite").json(
-                        f"{self.base_path}/{t}/batch={batch_id}"
-                    )
-                else:
-                    out.tables[t].write.mode("append").json(
-                        f"{self.base_path}/{t}"
-                    )
-
             names = list(out.tables)
             if self.write_layout == "single_job":
                 from functools import reduce
@@ -515,21 +501,29 @@ class JsonStreamDemux:
                         allrows.write.mode("append").partitionBy(
                             "__table__"
                         ).text(f"{self.base_path}/__rows__/batch=-1")
-            elif self.write_concurrency > 1 and len(names) > 1:
+            else:
                 # ... the per-table writes are independent (disjoint
                 # directories, shared persisted parse) and
                 # driver-latency bound, so they overlap on a pool.
-                from concurrent.futures import ThreadPoolExecutor
+                # exactly_once: a replayed batch OVERWRITES its own
+                # directory instead of re-appending — exactly-once by
+                # construction, no finalize-side dedup shuffle,
+                # uuid-rid-safe.
+                if self.exactly_once:
+                    row_mode, sub = "overwrite", f"/batch={batch_id}"
+                else:
+                    row_mode, sub = "append", ""
 
-                with ThreadPoolExecutor(
-                    max_workers=min(self.write_concurrency, len(names))
-                ) as ex:
-                    # list() drains the map so the first failure
-                    # raises AFTER the pool joins (no stranded tasks)
-                    list(ex.map(write_one, names))
-            else:
-                for t in names:
-                    write_one(t)
+                def write_one(t: str, path: str) -> None:
+                    # schema first, rows second (see class docstring).
+                    write_schema(t)
+                    out.tables[t].write.mode(row_mode).json(path)
+
+                write_each(
+                    {t: f"{self.base_path}/{t}{sub}" for t in names},
+                    write_one,
+                    self.write_concurrency,
+                )
         finally:
             spark.conf.set("spark.sql.caseSensitive", prev_case)
             out.unpersist()

@@ -39,6 +39,28 @@ def test_parse_variant_schema_roundtrip():
     assert t.fields["arr"].element.fields["k"].leaf_type == "DECIMAL(21,1)"
 
 
+@pytest.mark.parametrize(
+    "truncated",
+    [
+        "OBJECT<a: BIGINT, arr: ARRAY<OBJECT<k: DECIMAL(21,1)>",
+        "OBJECT<a: BIGINT, `a b",
+        "OBJECT<a: BIGINT, arr",
+        "OBJECT<a: ",
+        "",
+    ],
+)
+def test_parse_variant_schema_truncated_names_position(truncated):
+    # a ValueError, not a bare assert: python -O must still reject it
+    with pytest.raises(ValueError, match=r"at position \d+ of ") as info:
+        parse_variant_schema(truncated)
+    assert repr(truncated) in str(info.value)
+
+
+def test_parse_variant_schema_trailing_text():
+    with pytest.raises(ValueError, match="position 6 of 'BIGINT>'"):
+        parse_variant_schema("BIGINT>")
+
+
 # -- choice semantics through the full pipeline ------------------------------
 
 def test_choice_split_mixed_types(spark):

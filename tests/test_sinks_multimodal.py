@@ -18,7 +18,9 @@ from relationalize_spark.sinks.jdbc import (
     write_jdbc,
 )
 from relationalize_spark.sinks.writers import (
+    TableWriteError,
     write_csv_sorted,
+    write_each,
     write_jsonl,
     write_parquet,
     write_tables,
@@ -64,6 +66,100 @@ def test_write_tables(spark, small, tmp_path):
     write_tables({"t1": small, "t2": small}, str(tmp_path / "tabs"))
     assert spark.read.parquet(str(tmp_path / "tabs" / "t1")).count() == 2
     assert spark.read.parquet(str(tmp_path / "tabs" / "t2")).count() == 2
+
+
+def test_write_tables_empty_is_noop(tmp_path):
+    write_tables({}, str(tmp_path / "none"))
+    assert not (tmp_path / "none").exists()
+
+
+def test_write_each_rejects_empty_pool(tmp_path):
+    with pytest.raises(ValueError, match="max_workers"):
+        write_each({"t": str(tmp_path / "t")}, lambda t, p: None, max_workers=0)
+
+
+def test_write_each_runs_every_write_then_names_first_failure():
+    """More writes and threads than cores, a short switch interval:
+    every write runs exactly once, failures included, and the error
+    names the first failed table in submission order."""
+    import sys
+    import threading
+
+    targets = {f"t{i:02d}": f"/out/t{i:02d}" for i in range(64)}
+    seen: list[str] = []
+    lock = threading.Lock()
+
+    def write(t, p):
+        assert p == targets[t]
+        with lock:
+            seen.append(t)
+        if t in ("t40", "t07", "t63"):
+            raise OSError(f"disk full at {t}")
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with pytest.raises(TableWriteError) as info:
+            write_each(targets, write, max_workers=16)
+    finally:
+        sys.setswitchinterval(old)
+    assert sorted(seen) == sorted(targets)
+    err = info.value
+    assert (err.table, err.path) == ("t07", "/out/t07")
+    assert isinstance(err.__cause__, OSError)
+    assert "['t40', 't63']" in str(err)
+
+
+def test_write_tables_failure_names_table_after_others_finish(
+    spark, small, tmp_path
+):
+    base = tmp_path / "tabs"
+    (base / "t1").mkdir(parents=True)
+    with pytest.raises(TableWriteError) as info:
+        write_tables({"t1": small, "t2": small}, str(base), mode="errorifexists")
+    err = info.value
+    assert err.table == "t1" and err.path == f"{base}/t1"
+    assert "'t1'" in str(err) and f"{base}/t1" in str(err)
+    # the failing table did not stop the other write
+    assert spark.read.parquet(str(base / "t2")).count() == 2
+
+
+def test_write_tables_parity_with_relationalize_json(spark, tmp_path):
+    """Every table written through the pool reads back with the columns
+    and rows of the frame that was passed in."""
+    import json
+
+    from relationalize_spark.sources.jsonl import relationalize_json
+
+    objs = [
+        {
+            "id": i,
+            "amount": i if i % 2 else i + 0.5,
+            "tags": [f"t{i}", "x"],
+            "items": [
+                {
+                    "sku": f"s{i}-{j}",
+                    "opts": [j, "big" if j else 0],
+                    "legs": [{"hops": [i, j]}],
+                }
+                for j in range(2)
+            ],
+        }
+        for i in range(6)
+    ]
+    vdf = spark.createDataFrame(
+        [(json.dumps(o),) for o in objs], "value string"
+    ).select(F.parse_json("value").alias("v"))
+    out = relationalize_json(vdf, "root")
+    assert len(out.tables) >= 5
+    base = str(tmp_path / "tabs")
+    write_tables(out.tables, base)
+    for name, df in out.tables.items():
+        back = spark.read.parquet(f"{base}/{name}")
+        assert back.columns == df.columns, name
+        want = sorted(repr(tuple(r)) for r in df.collect())
+        assert sorted(repr(tuple(r)) for r in back.collect()) == want, name
+    out.unpersist()
 
 
 def test_jdbc_plan(small):
