@@ -54,13 +54,6 @@ from ..functions.vectors import as_double
 REPLAY_FP = 6
 REPLAY_SCORE = 9
 
-#: Iteration-fanout sizing for Lloyd's (r11 opt): see
-#: plans.scale.right_size_partitions — re-exported from the single
-#: source of truth (ADVICE r11: the duplicated literal could drift);
-#: kept as a module attribute so tests and A/Bs can dial it without
-#: touching the shared default.
-from ..plans.scale import ROWS_PER_TASK  # noqa: E402
-
 
 def assign_clusters(
     df: DataFrame,
@@ -227,16 +220,17 @@ def kmeans_fit(
     dim = len(centroids[0])
 
     fp = float(10 ** REPLAY_FP)
-    from ..plans.scale import right_size_partitions
+    from ..plans import scale
 
     sel = df.select(as_double(vec_col).alias("v"))
     # one cheap column-pruned count sizes the iteration fanout; it is
     # repaid many times over by max_iter iterations x 2 stages of
-    # right-sized task counts (see ROWS_PER_TASK). Result-neutral in
-    # replayable mode (BIGINT quanta sums are order-free);
-    # non-replayable double sums were never partition-stable anyway.
-    base = right_size_partitions(
-        sel, sel.count(), rows_per_task=ROWS_PER_TASK
+    # right-sized task counts (see scale.ROWS_PER_TASK, read here at
+    # call time). Result-neutral in replayable mode (BIGINT quanta sums
+    # are order-free); non-replayable double sums were never
+    # partition-stable anyway.
+    base = scale.right_size_partitions(
+        sel, sel.count(), rows_per_task=scale.ROWS_PER_TASK
     ).persist()
     try:
         for _ in range(max_iter):

@@ -5200,10 +5200,14 @@ def q130_stream_demux_dynamic(spark: SparkSession, sf: str) -> DataFrame:
     part = os.path.join(work, "w")
     ldf.repartition(4, "b").write.mode("overwrite").partitionBy("b").text(part)
     for i in range(4):
-        shutil.move(
-            glob.glob(os.path.join(part, f"b={i}", "part-*"))[0],
-            os.path.join(src, f"b{i}.txt"),
-        )
+        bdir = os.path.join(part, f"b={i}")
+        files = glob.glob(os.path.join(bdir, "part-*"))
+        if not files:
+            raise RuntimeError(
+                f"q130: batch {i} of the partitioned corpus write left no "
+                f"part file in {bdir}"
+            )
+        shutil.move(files[0], os.path.join(src, f"b{i}.txt"))
 
     # flat at-least-once layout on purpose: q130 attests the replay
     # + finalize(dedup_replays) recovery lane; the exactly_once

@@ -42,14 +42,12 @@ class TableWriteError(RuntimeError):
 
 
 def write_each(
-    targets: Mapping[str, str],
-    write: Callable[[str, str], None],
-    max_workers: int = WRITE_POOL_SIZE,
+    targets: Mapping[str, str], write: Callable[[str, str], None]
 ) -> None:
     """Call ``write(table, path)`` for every ``table -> path`` entry of
-    ``targets`` on a driver thread pool of up to ``max_workers``
-    threads — the one way this package submits a set of per-table
-    writes. Targets must be disjoint directories.
+    ``targets`` on a driver thread pool of up to
+    :data:`WRITE_POOL_SIZE` threads — the one way this package submits
+    a set of per-table writes. Targets must be disjoint directories.
 
     Every write runs to its end even when another one fails; after the
     pool joins, the first failed table in ``targets`` order raises
@@ -57,11 +55,9 @@ def write_each(
     tables listed). Spark local properties of the calling thread (job
     group, scheduler pool) do not carry into the pool threads.
     """
-    if max_workers < 1:
-        raise ValueError(f"max_workers must be at least 1, got {max_workers}")
     if not targets:
         return
-    with ThreadPoolExecutor(max_workers=min(max_workers, len(targets))) as ex:
+    with ThreadPoolExecutor(max_workers=min(WRITE_POOL_SIZE, len(targets))) as ex:
         futures = {t: ex.submit(write, t, p) for t, p in targets.items()}
     # leaving the block joined the pool: every write has ended
     failed = [t for t, f in futures.items() if f.exception() is not None]

@@ -172,20 +172,6 @@ def _cast_ddl(node: VNode) -> str:
     return node.leaf_type.lower()
 
 
-def merged_variant_schema(df: DataFrame, column: str = "v") -> VNode:
-    merged = df.agg(F.schema_of_variant_agg(column).alias("s")).collect()[0].s
-    return parse_variant_schema(merged)
-
-
-#: sentinel key injected for rows whose top level is not an object (and
-#: not VOID / SQL NULL, which the global schema merge absorbs): its
-#: presence in the grouped analysis routes the corpus to the legacy
-#: whole-object merge for the exact error. The leading NUL cannot come
-#: out of ordinary data without colliding ONLY into that fallback.
-_NONOBJECT_KEY = "\x00__nonobject__"
-_NONOBJECT_JSON = '{"\\u0000__nonobject__": null}'
-
-
 def _analyze_top_level(
     df: DataFrame, column: str = "v"
 ) -> tuple[
@@ -222,7 +208,7 @@ def _analyze_top_level(
     ``schema_of_variant_agg``'s own field ordering (Java string sort;
     verified against OBJECT merges containing non-BMP keys) — so the
     cast DDL, and therefore every downstream column order, is
-    bit-identical to the legacy path's.
+    bit-identical to the whole-object merge's.
 
     Name-lookup soundness (both returned dicts are consulted by
     COLUMN name downstream): a flattened struct-derived column can
@@ -235,29 +221,33 @@ def _analyze_top_level(
     struct-derived name with no plain twin is simply absent from the
     dicts and takes the aggregate path.
 
-    Degenerate corpora (any non-object top level, or zero observed
-    fields: empty/all-null/all-empty-object inputs) fall back to the
-    legacy whole-object merge so error behavior is exactly unchanged.
+    Degenerate corpora take the same job. Every row with no field to
+    explode (a non-object, an empty object or a null) yields one
+    ``lvl=-1`` row holding the row itself, so that group's merged
+    schema is what the whole-object merge folds besides the fields.
+    When it is neither ``OBJECT<>`` nor VOID, the corpus is not all
+    objects and the tree is that type, or VARIANT when objects with
+    fields sit next to it; empty or all-null input is a VOID leaf.
+    ``relationalize_json``'s object check then names the type.
     """
     from ..operators.infer import ref_tag_from_schema_str
 
     spark = df.sparkSession
     col = F.col("`" + column.replace("`", "``") + "`")
-    sov = F.schema_of_variant(col)
-    # objects explode to their fields; VOID / SQL-NULL rows explode to
-    # nothing (the global merge absorbs both); anything else injects
-    # the sentinel field so the fallback (and its exact error) fires.
-    keep = sov.isNull() | sov.startswith("OBJECT") | (sov == "VOID")
-    w = F.when(keep, col).otherwise(F.parse_json(F.lit(_NONOBJECT_JSON)))
+    is_obj = F.schema_of_variant(col).startswith("OBJECT")
     kv = (
-        df.select(w.alias("__w__"))
-        .lateralJoin(spark.tvf.variant_explode(F.col("__w__").outer()))
-        .select("key", "value")
+        df.select(F.when(is_obj, col).alias("__w__"), col.alias("__t__"))
+        .lateralJoin(spark.tvf.variant_explode_outer(F.col("__w__").outer()))
+        .select(
+            F.when(F.col("pos").isNull(), -1).otherwise(0).alias("lvl"),
+            "key",
+            F.when(F.col("pos").isNull(), F.col("__t__"))
+            .otherwise(F.col("value"))
+            .alias("value"),
+        )
     )
-    sval = F.schema_of_variant("value")
-    lvl0 = kv.select(F.lit(0).alias("lvl"), "key", "value")
     elems = (
-        kv.where(sval.startswith("ARRAY"))
+        kv.where(F.schema_of_variant("value").startswith("ARRAY"))
         .select(F.col("key").alias("__k__"), F.col("value").alias("__a__"))
         .lateralJoin(spark.tvf.variant_explode(F.col("__a__").outer()))
         .select(F.lit(1).alias("lvl"), F.col("__k__").alias("key"), "value")
@@ -268,7 +258,7 @@ def _analyze_top_level(
         .otherwise(ref_tag_from_schema_str(F.schema_of_variant("value")))
     )
     rows = (
-        lvl0.unionByName(elems)
+        kv.unionByName(elems)
         .groupBy("lvl", "key")
         .agg(
             F.schema_of_variant_agg("value").alias("vs"),
@@ -280,8 +270,9 @@ def _analyze_top_level(
         .collect()
     )
     fields = [r for r in rows if r["lvl"] == 0]
-    if not fields or any(r["key"] == _NONOBJECT_KEY for r in fields):
-        return merged_variant_schema(df, column), None, None
+    rest = next((r["vs"] for r in rows if r["lvl"] == -1), None) or "VOID"
+    if rest not in ("OBJECT<>", "VOID") or (rest == "VOID" and not fields):
+        return parse_variant_schema("VARIANT" if fields else rest), None, None
     tree = VNode("object")
     for r in sorted(fields, key=lambda r: r["key"].encode("utf-16-be")):
         tree.fields[r["key"]] = parse_variant_schema(r["vs"])

@@ -30,7 +30,7 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.relationalize import relationalize
 from ..schema import Schema
-from ..sinks.writers import WRITE_POOL_SIZE, write_each
+from ..sinks.writers import write_each
 
 TableSink = Callable[[str, DataFrame, int], None]
 
@@ -214,7 +214,9 @@ class JsonStreamDemux:
     recovers every table's schema from these files on first use;
     ``finalize`` refuses loudly if ``base_path`` holds a table
     directory with no recoverable schema (e.g. written by something
-    other than this demux) rather than emit a silently narrowed view.
+    other than this demux), or a ``{base_path}/__rows__`` directory
+    (the single-job layout, which is no longer read), rather than
+    emit a silently narrowed view.
 
     Scale shape: per batch this is the batch pipeline (variant casts
     and projections, one branch-analysis aggregate per nesting level
@@ -225,8 +227,8 @@ class JsonStreamDemux:
     MICRO-BATCH SIZING (measured, BASELINE.md r8): per-batch latency
     scales with DISCOVERED TABLE COUNT (one Catalyst analysis + one
     write job + one schema write each), independent of row count —
-    ~0.7 s/table submitted serially, ~0.5 s/table with the default
-    8-thread write pool (``write_concurrency``): a 70-table dynamic
+    ~0.5 s/table with the tables' writes overlapped on the shared
+    ``sinks.writers.WRITE_POOL_SIZE``-thread pool: a 70-table dynamic
     stream has a ~35 s per-batch floor even at 250 rows/batch. Size
     triggers so the batch interval is well above 0.5 s x expected
     table count (multi-minute triggers or AvailableNow for wide
@@ -252,58 +254,6 @@ class JsonStreamDemux:
     #: finalize(dedup_replays=True) once (hash rids), or clean the
     #: flat files, before trusting the no-dedup view.
     exactly_once: bool = True
-    #: HOW each batch's rows land (r10, the attack on the measured
-    #: per-TABLE driver floor):
-    #: - "per_table" (default, the attested layout): one write job
-    #:   per discovered table under ``{base}/{table}`` — ~0.5-0.7 s
-    #:   of driver latency per table per batch (Catalyst analysis +
-    #:   job submission), overlapped by the write pool.
-    #: - "single_job": every table's rows render to JSON lines
-    #:   driver-free (``to_json(struct(*))`` — the same Jackson
-    #:   rendering the per-table json writer uses), union into ONE
-    #:   frame tagged ``__table__``, and land in ONE
-    #:   ``partitionBy("__table__")`` text write under
-    #:   ``{base}/__rows__`` — one job submission per batch no matter
-    #:   how many tables the batch discovered. MEASURED NEGATIVE for
-    #:   latency (bench_demux_scale F, 70-table corpus, same session):
-    #:   66.5 s/batch vs per_table's 35.2 s — analyzing one 70-branch
-    #:   union serializes what the 8-thread pool overlaps, the r7
-    #:   plan-fusion result in new clothes. Choose it only when the
-    #:   OUTPUT SHAPE is worth that cost: downstream consumers get a
-    #:   single partition-pruned tree
-    #:   (``__rows__/batch=N/__table__=T``) instead of N directories.
-    #:   The per-table _schema.json metadata writes are unchanged and
-    #:   already skip when stable. ``finalize``/``read_quarantine``
-    #:   read BOTH layouts (their union), so switching layouts
-    #:   mid-corpus is safe; partition values are escaped/restored by
-    #:   Spark's partition discovery, so exotic table names survive
-    #:   the round trip. exactly_once overwrites
-    #:   ``__rows__/batch={id}`` per batch (same idempotent-replay
-    #:   contract as the per-table batch dirs); append mode lands
-    #:   under the sentinel ``batch=-1`` so the tree keeps ONE
-    #:   partition depth — flipping exactly_once mid-corpus is safe
-    #:   here too (mixed depths would break partition discovery,
-    #:   which per_table tolerates via recursiveFileLookup but a
-    #:   partition-discovered tree must not). Corpora whose appends
-    #:   predate the batch=-1 sentinel (flat ``__rows__/__table__=T``)
-    #:   stay readable: ``finalize`` detects the two generations and
-    #:   reads each as its own partition-discovery root.
-    write_layout: str = "per_table"
-    #: per-batch table writes run on a driver thread pool of this
-    #: size (1 = serial). Part of the ~0.7 s/table per-batch floor is
-    #: driver latency (Catalyst analysis + job submission +
-    #: schema-file write, serially per table) that concurrent
-    #: submission overlaps across tables (Py4J releases the GIL
-    #: during JVM calls; writes target disjoint directories; the
-    #: schema-before-rows crash invariant is per-table and preserved
-    #: inside each task). Measured on the 70-table wide-dynamic
-    #: corpus, same session (BASELINE.md r8): steady per-batch
-    #: 50.0 s serial -> 35.2 s at 8 threads (1.42x; 16 threads no
-    #: better — the residue is executor-side job work plus
-    #: lock-serialized analysis, not submission latency). Default
-    #: ``sinks.writers.WRITE_POOL_SIZE`` (8), the pool ``write_tables``
-    #: uses; set 1 for strictly serial submission.
-    write_concurrency: int = WRITE_POOL_SIZE
     schemas: dict[str, Schema] = field(default_factory=dict)
     #: batch_id -> number of malformed lines quarantined in that batch
     #: (write-time Observation, no second scan; cleared with the
@@ -346,9 +296,23 @@ class JsonStreamDemux:
         _fs_write_text's delete and rename is adopted (and the swap
         finished); a table dir whose only content is an unparsable
         tmp — crash mid-FIRST-schema-write, before any row appended —
-        is skipped, the replayed batch rewrites it."""
+        is skipped, the replayed batch rewrites it. A ``__rows__``
+        directory (the single-job layout) raises: that layout is no
+        longer read, so its rows would vanish from finalize() too.
+        Existence is the test because its ``__table__=T`` partition
+        directories are ``_``-prefixed, which ``_fs_has_data_files``
+        skips as metadata."""
         if self._recovered:
             return
+        rows_root = f"{self.base_path}/__rows__"
+        fs, p = _fs_for(spark, rows_root)
+        if fs.exists(p):
+            raise RuntimeError(
+                f"JsonStreamDemux: {rows_root} is the single-job write "
+                "layout, which is no longer read; finalize() would silently "
+                "drop its rows. Move the directory out of base_path or "
+                "point the demux at a fresh base_path."
+            )
         for t in _fs_list_dirs(spark, self.base_path):
             if t.startswith(("_", ".")):
                 continue
@@ -449,7 +413,19 @@ class JsonStreamDemux:
                     self.schemas.get(t, Schema()), out.schemas[t]
                 )
 
-            def write_schema(t: str) -> None:
+            # ... the per-table writes are independent (disjoint
+            # directories, shared persisted parse) and driver-latency
+            # bound, so they overlap on the write pool. exactly_once: a
+            # replayed batch OVERWRITES its own directory instead of
+            # re-appending — exactly-once by construction, no
+            # finalize-side dedup shuffle, uuid-rid-safe.
+            if self.exactly_once:
+                row_mode, sub = "overwrite", f"/batch={batch_id}"
+            else:
+                row_mode, sub = "append", ""
+
+            def write_one(t: str, path: str) -> None:
+                # schema first, rows second (see class docstring).
                 # Schema-stable fast path: when the merged schema
                 # serializes to exactly what is already on disk, the
                 # rewrite is a no-op — skip the per-table FS round
@@ -462,125 +438,24 @@ class JsonStreamDemux:
                         spark, f"{self.base_path}/{t}/_schema.json", ser
                     )
                     self._written_schemas[t] = ser
+                out.tables[t].write.mode(row_mode).json(path)
 
-            names = list(out.tables)
-            if self.write_layout == "single_job":
-                from functools import reduce
-
-                # schema metadata first (schema-before-rows crash
-                # invariant; skipped per table when stable), then ONE
-                # union write for every table's rows
-                for t in names:
-                    write_schema(t)
-                parts = [
-                    out.tables[t].select(
-                        F.to_json(F.struct("*")).alias("value"),
-                        F.lit(t).alias("__table__"),
-                    )
-                    for t in names
-                ]
-                # A batch can discover zero tables only if
-                # relationalize_json emits nothing (the root table is
-                # always emitted today, but the per_table path is a
-                # no-op on an empty table set and this lane must fail
-                # the same way — reduce() on [] would raise instead).
-                if parts:
-                    allrows = reduce(DataFrame.unionByName, parts)
-                    # Rows ALWAYS land under a batch=N level — append
-                    # mode uses the sentinel batch=-1 — so the
-                    # __rows__ tree keeps ONE partition depth even if
-                    # exactly_once is flipped mid-corpus (partition
-                    # discovery rejects trees that mix
-                    # __rows__/__table__=T with
-                    # __rows__/batch=N/__table__=T).
-                    if self.exactly_once:
-                        allrows.write.mode("overwrite").partitionBy(
-                            "__table__"
-                        ).text(f"{self.base_path}/__rows__/batch={batch_id}")
-                    else:
-                        allrows.write.mode("append").partitionBy(
-                            "__table__"
-                        ).text(f"{self.base_path}/__rows__/batch=-1")
-            else:
-                # ... the per-table writes are independent (disjoint
-                # directories, shared persisted parse) and
-                # driver-latency bound, so they overlap on a pool.
-                # exactly_once: a replayed batch OVERWRITES its own
-                # directory instead of re-appending — exactly-once by
-                # construction, no finalize-side dedup shuffle,
-                # uuid-rid-safe.
-                if self.exactly_once:
-                    row_mode, sub = "overwrite", f"/batch={batch_id}"
-                else:
-                    row_mode, sub = "append", ""
-
-                def write_one(t: str, path: str) -> None:
-                    # schema first, rows second (see class docstring).
-                    write_schema(t)
-                    out.tables[t].write.mode(row_mode).json(path)
-
-                write_each(
-                    {t: f"{self.base_path}/{t}{sub}" for t in names},
-                    write_one,
-                    self.write_concurrency,
-                )
+            write_each(
+                {t: f"{self.base_path}/{t}{sub}" for t in out.tables}, write_one
+            )
         finally:
             spark.conf.set("spark.sql.caseSensitive", prev_case)
             out.unpersist()
 
     def _table_lines(self, spark: SparkSession, t: str) -> DataFrame:
-        """One ``value`` column of table ``t``'s raw JSONL from
-        whichever layouts hold rows — the per-table directory (flat
-        appends AND exactly_once ``batch=N`` subdirs, read with
-        recursiveFileLookup so ``_``-prefixed metadata is skipped)
-        unioned with the single-job ``__rows__`` tree (read through
-        partition discovery so the ``__table__`` filter prunes to
-        ``t``'s directories at plan time and escaped partition values
-        decode back to the real table name). A demux that has only
-        ever used one layout reads only that one; a corpus migrated
-        between layouts reads both."""
-        parts: list[DataFrame] = []
-        if _fs_has_data_files(spark, f"{self.base_path}/{t}"):
-            parts.append(
-                spark.read.option("recursiveFileLookup", "true").text(
-                    f"{self.base_path}/{t}"
-                )
-            )
-        rows_root = f"{self.base_path}/__rows__"
-        fs, p = _fs_for(spark, rows_root)
-        if fs.exists(p):
-            # The tree may hold TWO single-job generations: the
-            # legacy flat append shape (__rows__/__table__=T, written
-            # before r11 moved appends under batch=-1) and the
-            # uniform batch=N shape. Partition discovery rejects a
-            # tree mixing the two depths, so each consistent
-            # generation is read as its own root (basePath keeps the
-            # partition columns resolving against __rows__) and the
-            # results union — old corpora stay readable after the
-            # layout change.
-            kids = _fs_list_dirs(spark, rows_root)
-            legacy = [k for k in kids if k.startswith("__table__=")]
-            batched = [k for k in kids if k.startswith("batch=")]
-            if legacy and batched:
-                for gen in (legacy, batched):
-                    parts.append(
-                        spark.read.option("basePath", rows_root)
-                        .text([f"{rows_root}/{k}" for k in gen])
-                        .where(F.col("__table__") == t)
-                        .select("value")
-                    )
-            else:
-                parts.append(
-                    spark.read.text(rows_root)
-                    .where(F.col("__table__") == t)
-                    .select("value")
-                )
-        if not parts:
+        """One ``value`` column of table ``t``'s raw JSONL: the flat
+        appends and exactly_once ``batch=N`` subdirectories under
+        ``{base_path}/{t}``, read with recursiveFileLookup so
+        ``_``-prefixed metadata is skipped."""
+        path = f"{self.base_path}/{t}"
+        if not _fs_has_data_files(spark, path):
             return spark.createDataFrame([], "value string")
-        out = parts[0]
-        for extra in parts[1:]:
-            out = out.unionByName(extra)
-        return out
+        return spark.read.option("recursiveFileLookup", "true").text(path)
 
     def attach(self, stream_df: DataFrame) -> DataStreamWriter:
         """Wire onto a stream; caller picks trigger/checkpoint."""

@@ -53,6 +53,22 @@ def test_kmeans_fit_requires_k_rows(points):
         kmeans_fit(points, "embedding", k=7, id_col="id")
 
 
+def test_kmeans_fit_reads_rows_per_task_at_call_time(points, monkeypatch):
+    from relationalize_spark.plans import scale
+
+    seen = []
+    right_size = scale.right_size_partitions
+
+    def spy(df, n_rows, rows_per_task):
+        seen.append(rows_per_task)
+        return right_size(df, n_rows, rows_per_task)
+
+    monkeypatch.setattr(scale, "ROWS_PER_TASK", 2)
+    monkeypatch.setattr(scale, "right_size_partitions", spy)
+    kmeans_fit(points, "embedding", k=2, max_iter=1, id_col="id")
+    assert seen == [2]
+
+
 def _inertia(df, centroids):
     import numpy as np
 

@@ -221,6 +221,46 @@ def test_fused_analysis_job_count(spark):
     assert all("jsonl.py" in s for s in sites), sites
 
 
+_NOT_OBJECTS = "top-level JSON must be objects, got "
+
+
+@pytest.mark.parametrize(
+    "objs, outcome",
+    [
+        ([], "leaf (VOID)"),
+        ([None, None], "leaf (VOID)"),
+        ([{}, {}], []),
+        ([[1, 2], [3]], "array ()"),
+        ([1, 2], "leaf (BIGINT)"),
+        ([{"a": 1}, [1]], "leaf (VARIANT)"),
+        ([{"a": 1}, "s"], "leaf (VARIANT)"),
+        ([{"a": 1}, None], ["a"]),
+        ([{"a": 1}, {}], ["a"]),
+    ],
+    ids=[
+        "empty", "all-null", "all-empty-objects", "arrays", "scalars",
+        "object+array", "object+string", "object+null", "object+empty-object",
+    ],
+)
+def test_degenerate_top_level(spark, objs, outcome):
+    """Corpora whose top level is not (only) objects: a non-object or
+    VOID top level fails with the whole corpus's merged type named; null
+    rows and empty objects next to objects are rows with no fields."""
+    df = (
+        spark.createDataFrame([(json.dumps(o),) for o in objs], "value string")
+        .select(F.parse_json("value").alias("v"))
+    )
+    if isinstance(outcome, str):
+        with pytest.raises(ValueError) as info:
+            relationalize_json(df, "root")
+        assert str(info.value) == _NOT_OBJECTS + outcome
+        return
+    out = relationalize_json(df, "root")
+    assert list(out.tables) == ["root"]
+    assert out["root"].columns == outcome
+    assert out["root"].count() == 2
+
+
 def test_none_lattice_through_pipeline(spark):
     out = relationalize_json(
         vdf(spark, [{"a": None, "b": None}, {"a": 1, "b": None}]), "root"

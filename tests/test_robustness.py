@@ -4,6 +4,7 @@ reads, small-files compaction."""
 import json
 
 import pyspark.sql.functions as F
+import pytest
 
 from relationalize_spark.plans.scale import compact_files
 from relationalize_spark.sources.readers import (
@@ -62,3 +63,15 @@ def test_compact_files_reduces_file_count(spark, tmp_path):
         spark.read.parquet(out).agg(F.sum("id")).collect()[0][0]
         == df.agg(F.sum("id")).collect()[0][0]
     )
+
+
+def test_q130_names_batch_without_part_file(spark, sf_dir, monkeypatch):
+    """An empty b=<i> directory after q130's partitioned corpus write
+    fails with the batch and the directory named, not an IndexError."""
+    import glob
+
+    from relationalize_spark import queries
+
+    monkeypatch.setattr(glob, "glob", lambda pattern: [])
+    with pytest.raises(RuntimeError, match=r"q130: batch 0 .* no part file in .*b=0"):
+        queries.q130_stream_demux_dynamic(spark, sf_dir)

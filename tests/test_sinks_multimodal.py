@@ -73,11 +73,6 @@ def test_write_tables_empty_is_noop(tmp_path):
     assert not (tmp_path / "none").exists()
 
 
-def test_write_each_rejects_empty_pool(tmp_path):
-    with pytest.raises(ValueError, match="max_workers"):
-        write_each({"t": str(tmp_path / "t")}, lambda t, p: None, max_workers=0)
-
-
 def test_write_each_runs_every_write_then_names_first_failure():
     """More writes and threads than cores, a short switch interval:
     every write runs exactly once, failures included, and the error
@@ -100,7 +95,7 @@ def test_write_each_runs_every_write_then_names_first_failure():
     sys.setswitchinterval(1e-6)
     try:
         with pytest.raises(TableWriteError) as info:
-            write_each(targets, write, max_workers=16)
+            write_each(targets, write)
     finally:
         sys.setswitchinterval(old)
     assert sorted(seen) == sorted(targets)
